@@ -284,6 +284,16 @@ def shuffle_order(
     return zip_with_index(ordered, out=out).drop("__h__")
 
 
+def _join_null_safe(df: DataFrame, per_group: DataFrame, group_col: str) -> DataFrame:
+    """``df`` joined to the broadcast per-group frame on ``group_col`` with
+    NULL matching NULL: a plain equi-join would drop NULL-group rows before
+    the in-plan coverage guards could name them."""
+    g = per_group.withColumnRenamed(group_col, "__grp__")
+    return df.join(
+        F.broadcast(g), F.col(group_col).eqNullSafe(F.col("__grp__"))
+    ).drop("__grp__")
+
+
 def interleave_by_weight(
     df: DataFrame,
     group_col: str,
@@ -352,14 +362,14 @@ def interleave_by_weight(
         F.raise_error(
             F.concat(
                 F.lit("groups without a weight: ['"),
-                F.col(group_col).cast("string"),
+                F.coalesce(F.col(group_col).cast("string"), F.lit("NULL")),
                 F.lit("']"),
             )
         ).cast("double")
     )
     vt = ((F.col("__gr__") - F.col("__off__") + 1) / weight_expr).alias("__vt__")
     paced = (
-        ranked.join(F.broadcast(offsets), group_col)
+        _join_null_safe(ranked, offsets, group_col)
         .select(*df.columns, "__h__", vt)
     )
     final = zip_with_index(
@@ -439,15 +449,14 @@ def sample_to_token_budget(
     budget_expr = F.raise_error(
         F.concat(
             F.lit("groups without a budget: ['"),
-            F.col(group_col).cast("string"),
+            F.coalesce(F.col(group_col).cast("string"), F.lit("NULL")),
             F.lit("']"),
         )
     ).cast("long")
     for g, b in budgets.items():
         budget_expr = F.when(F.col(group_col) == g, F.lit(int(b))).otherwise(budget_expr)
     out = (
-        tagged.join(F.broadcast(p_off), "__pid__")
-        .join(F.broadcast(g_base), group_col)
+        _join_null_safe(tagged.join(F.broadcast(p_off), "__pid__"), g_base, group_col)
         .withColumn(
             "group_cumsum",
             F.sum("__sz__").over(w_local) + F.col("__poff__") - F.col("__gbase__"),

@@ -140,14 +140,12 @@ def stream_from_elements_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.length("n_name")).alias("total_len"),
     )
-    from proteus_engine_spark.streaming.sources import (
-        run_to_completion,
-        state_partitions_for,
-    )
+    from proteus_engine_spark.streaming.sources import run_stream
 
-    out = run_to_completion(
-        agg, "from_elements_gate_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    # state sized on events like the events-stream gates (nation is a few
+    # KB and would plan the floor, half the partitions at sf0.1)
+    out, _ = run_stream(
+        agg, "from_elements_gate_sink", sf_dir, "events", output_mode="complete"
     )
     return out.select("n_regionkey", "n", "total_len")
 

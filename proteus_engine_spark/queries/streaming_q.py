@@ -27,9 +27,10 @@ from proteus_engine_spark.streaming.async_io import async_enrich
 from proteus_engine_spark.streaming.sources import (
     LATE_CUT_PCT,
     events_stream,
+    file_stream,
     late_cut_ms,
-    run_to_completion,
-    state_partitions_for,
+    run_stream,
+    stage_replay,
 )
 from proteus_engine_spark.streaming.stateful import (
     bounded_over_agg,
@@ -60,9 +61,8 @@ def stream_tumble_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, "ts", "10 minutes", "1 hour", ["event_type"],
         [F.count(F.lit(1)).alias("n"), dsum("value", "total_value")],
     )
-    out = run_to_completion(
-        agg, "stream_tumble_agg_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    out, _ = run_stream(
+        agg, "stream_tumble_agg_sink", sf_dir, "events", output_mode="complete"
     )
     return out.select("window_start", "event_type", "n", "total_value")
 
@@ -86,25 +86,8 @@ def stream_csv_tumble_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema (schema inference on a stream would re-scan per batch).
     Exists precisely so the streaming gate does not hinge on a single
     source decode path: every other stream_* query replays parquet."""
-    import os
-    import shutil
-    import tempfile
 
-    parent = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    scratch = os.path.join(
-        parent,
-        "csv_events_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_"),
-    )
-    if not os.path.exists(os.path.join(scratch, "_SUCCESS")):
-        # stage into a unique sibling, atomically rename into place —
-        # a concurrent run either wins the rename or discards its copy
-        # (the content is deterministic either way); never write into the
-        # shared path directly (the text-gate flake class).
-        os.makedirs(parent, exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix="csv_events_stage_", dir=parent)
+    def write(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         (
             ev.select(
@@ -117,13 +100,10 @@ def stream_csv_tumble_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .coalesce(1)
             .write.mode("overwrite")
             .option("header", "false")
-            .csv(os.path.join(tmp, "data"))
+            .csv(tmp)
         )
-        try:
-            os.replace(os.path.join(tmp, "data"), scratch)
-        except OSError:
-            pass  # concurrent run won; contents identical
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    scratch = stage_replay("csv_events", sf_dir, write)
     csv_schema = "event_id long, ts_ms long, user_id long, event_type string, value double"
     stream = (
         spark.readStream.schema(csv_schema)
@@ -135,9 +115,8 @@ def stream_csv_tumble_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, "ts", "10 minutes", "1 hour", ["event_type"],
         [F.count(F.lit(1)).alias("n"), dsum("value", "total_value")],
     )
-    out = run_to_completion(
-        agg, "stream_csv_tumble_agg_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    out, _ = run_stream(
+        agg, "stream_csv_tumble_agg_sink", sf_dir, "events", output_mode="complete"
     )
     return out.select("window_start", "event_type", "n", "total_value")
 
@@ -169,9 +148,8 @@ def stream_unbounded_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type", "user_id"],
         [F.count(F.lit(1)).alias("n_pair"), F.sum(dec("value")).alias("v_pair")],
     )
-    out = run_to_completion(
-        pairs, "stream_unbounded_agg_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    out, _ = run_stream(
+        pairs, "stream_unbounded_agg_sink", sf_dir, "events", output_mode="complete"
     )
     # count(user_id), not count(*): SQL COUNT(DISTINCT user_id) excludes
     # NULLs, so the NULL-user group (a state key like any other) must not
@@ -207,9 +185,8 @@ def stream_hop_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.count(F.lit(1)).alias("n"), dsum("value", "total_value")],
         slide="30 minutes",
     )
-    out = run_to_completion(
-        agg, "stream_hop_agg_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    out, _ = run_stream(
+        agg, "stream_hop_agg_sink", sf_dir, "events", output_mode="complete"
     )
     return out.select("window_start", "event_type", "n", "total_value")
 
@@ -250,9 +227,8 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.count(F.lit(1)).alias("n"), dsum("value", "total_value")],
         session_gap="10 minutes",
     )
-    out = run_to_completion(
-        agg, "stream_session_agg_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    out, _ = run_stream(
+        agg, "stream_session_agg_sink", sf_dir, "events", output_mode="complete"
     )
     return out.select("user_id", "window_start", "window_end", "n", "total_value")
 
@@ -279,10 +255,7 @@ def stream_event_time_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 10-minute watermark tail."""
     ev = events_stream(spark, sf_dir)
     sorted_ev = event_time_sort(ev, "user_id", "ts")
-    return run_to_completion(
-        sorted_ev, "stream_ets_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(sorted_ev, "stream_ets_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -307,10 +280,7 @@ def stream_side_input_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nk") == F.col("n_nationkey"),
         how="inner",
     ).select("event_id", "user_id", "event_type", "n_name")
-    return run_to_completion(
-        joined, "stream_side_input_keyed_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(joined, "stream_side_input_keyed_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -332,10 +302,7 @@ def stream_side_input_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = broadcast_side_input(
         ev, cust, F.col("user_id") == F.col("c_custkey"), how="inner"
     ).select("event_id", "user_id", "event_type", "c_name", "c_mktsegment")
-    return run_to_completion(
-        joined, "stream_side_input_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(joined, "stream_side_input_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -387,9 +354,8 @@ def stream_side_input_forwarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stream, then roll the streamed result up per tag — no column is
     # computed from a batch re-read (the oracle verifies the stream output).
     pairs = tagged.groupBy("is_side", "user_id").agg(F.count(F.lit(1)).alias("n_pair"))
-    out = run_to_completion(
-        pairs, "stream_side_input_fwd_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    out, _ = run_stream(
+        pairs, "stream_side_input_fwd_sink", sf_dir, "events", output_mode="complete"
     )
     # count(user_id) mirrors COUNT(DISTINCT user_id)'s NULL exclusion.
     return out.groupBy("is_side").agg(
@@ -424,9 +390,8 @@ def stream_split_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = high.unionByName(low).groupBy("branch").agg(
         F.count(F.lit(1)).alias("n"), dsum("value", "total_value")
     )
-    out = run_to_completion(
-        agg, "stream_split_select_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    out, _ = run_stream(
+        agg, "stream_split_select_sink", sf_dir, "events", output_mode="complete"
     )
     return out.select("branch", "n", "total_value")
 
@@ -458,10 +423,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id") == F.col("c_user"),
         lower="30 minutes", upper="0 seconds",
     ).select("purchase_id", "click_id", "user_id")
-    return run_to_completion(
-        joined, "stream_interval_join_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(joined, "stream_interval_join_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -474,10 +436,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches this via keyed ValueState; Spark manages the seen-set)."""
     ev = events_stream(spark, sf_dir).select("user_id", "event_type")
     dedup = ev.dropDuplicates(["user_id", "event_type"])
-    return run_to_completion(
-        dedup, "stream_dedup_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(dedup, "stream_dedup_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -513,10 +472,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    return run_to_completion(
-        dedup, "stream_dedup_ww_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(dedup, "stream_dedup_ww_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -543,10 +499,7 @@ def stream_count_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit (CountTrigger.FIRE); the open remainder stays in state."""
     ev = events_stream(spark, sf_dir)
     cw = count_window_agg(ev, "user_id", ["ts", "event_id"], "value", window_size=10)
-    out = run_to_completion(
-        cw, "stream_count_window_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    out, _ = run_stream(cw, "stream_count_window_sink", sf_dir, "events")
     return out.select(
         "user_id", "win_id", "n", F.round("total_value", 6).alias("total_value"),
         "first_id", "last_id",
@@ -654,10 +607,7 @@ def stream_over_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation is order-independent) minus the watermark-delay tail."""
     ev = events_stream(spark, sf_dir)
     out = running_over_agg(ev, "user_id", "ts", "value")
-    return run_to_completion(
-        out, "stream_over_running_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_over_running_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -688,10 +638,7 @@ def stream_over_running_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_stream_ooo(spark, sf_dir)
     out = running_over_agg(ev, "user_id", "ts", "value", watermark_delay="5 hours")
-    return run_to_completion(
-        out, "stream_over_running_ooo_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_over_running_ooo_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -715,10 +662,7 @@ def stream_event_time_sort_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_stream_ooo(spark, sf_dir)
     out = event_time_sort(ev, "user_id", "ts", watermark_delay="5 hours")
-    return run_to_completion(
-        out, "stream_ets_ooo_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_ets_ooo_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -747,10 +691,7 @@ def stream_tumble_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, "ts", "10 minutes", "1 hour", ["event_type"],
         [F.count(F.lit(1)).alias("n"), dsum("value", "total_value")],
     )
-    out = run_to_completion(
-        agg, "stream_tumble_append_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    out, _ = run_stream(agg, "stream_tumble_append_sink", sf_dir, "events")
     return out.select("window_start", "event_type", "n", "total_value")
 
 
@@ -801,10 +742,7 @@ def stream_idle_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         on_timeout=on_timeout,
         event_time_col="ts",
     )
-    return run_to_completion(
-        out, "stream_idle_timeout_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_idle_timeout_sink", sf_dir, "events")[0]
 
 
 def _enrich_lookup(row: dict) -> dict:
@@ -1250,10 +1188,7 @@ def stream_over_bounded_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffered — append semantics, as in stream_tumble_append)."""
     ev = events_stream(spark, sf_dir)
     out = bounded_over_agg(ev, "user_id", "ts", "value", n_rows=5)
-    return run_to_completion(
-        out, "stream_over_bounded_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_over_bounded_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -1289,10 +1224,7 @@ def stream_over_bounded_rows_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = bounded_over_agg(
         ev, "user_id", "ts", "value", n_rows=5, watermark_delay="5 hours"
     )
-    return run_to_completion(
-        out, "stream_over_bounded_ooo_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_over_bounded_ooo_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -1325,10 +1257,7 @@ def stream_over_bounded_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_stream(spark, sf_dir)
     out = bounded_range_over_agg(ev, "user_id", "ts", "value", range_ms=86_400_000)
-    return run_to_completion(
-        out, "stream_over_bounded_range_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_over_bounded_range_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -1423,10 +1352,7 @@ def stream_tumble_time_evictor(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_ms=3_600_000,
         watermark_delay="10 minutes",
     )
-    res = run_to_completion(
-        out, "stream_tumble_time_evictor_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    res, _ = run_stream(out, "stream_tumble_time_evictor_sink", sf_dir, "events")
     return res.select("user_id", "win_start", "n", "total_value")
 
 
@@ -1475,10 +1401,7 @@ def stream_count_evictor_fires(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_ms=None,
         watermark_delay="10 minutes",
     )
-    res = run_to_completion(
-        out, "stream_count_evictor_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    res, _ = run_stream(out, "stream_count_evictor_sink", sf_dir, "events")
     return res.select("user_id", "fire_seq", "n", "total_value")
 
 
@@ -1540,10 +1463,7 @@ def stream_delta_trigger_fires(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_ms=None,
         watermark_delay="10 minutes",
     )
-    res = run_to_completion(
-        out, "stream_delta_trigger_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    res, _ = run_stream(out, "stream_delta_trigger_sink", sf_dir, "events")
     return res.select("user_id", "fire_seq", "n", "total_value")
 
 
@@ -1574,31 +1494,12 @@ def queryable_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"), F.sum(dec("value")).alias("s")
     )
     ckpt = tempfile.mkdtemp(prefix="proteus_qstate_")
-    writer = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("queryable_state_sink")
-        .option("checkpointLocation", ckpt)
+    # the state data source reads the partition count back from the
+    # checkpoint's state metadata: the lookup is partition-count-independent
+    run_stream(
+        agg, "queryable_state_sink", sf_dir, "events",
+        output_mode="complete", checkpoint=ckpt,
     )
-    # scale-adaptive state partitioning (r18) — same discipline as
-    # run_to_completion; the state data source reads the partition count
-    # back from the checkpoint's state metadata, so the lookup is
-    # partition-count-independent
-    sp = state_partitions_for(spark, sf_dir)
-    if sp:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-        try:
-            q = writer.start()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    else:
-        q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
     state = QueryableStateClient(spark, ckpt).get_state()
     return state.select(
         "event_type",
@@ -1792,10 +1693,7 @@ def stream_over_sql_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)",
         alias="total",
     )
-    return run_to_completion(
-        out, "stream_over_sql_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_over_sql_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -1833,10 +1731,7 @@ def stream_over_running_range_peers(spark: SparkSession, sf_dir: str) -> DataFra
     out = running_over_agg(
         ev, "user_id", "ts_h", "value", frame="range", watermark_delay="10 minutes"
     )
-    res = run_to_completion(
-        out, "stream_over_rrange_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    res, _ = run_stream(out, "stream_over_rrange_sink", sf_dir, "events")
     return res.select("user_id", "event_id", "ts_h", "running_sum", "running_cnt")
 
 
@@ -1864,9 +1759,8 @@ def stream_window_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, "ts", "10 minutes", "1 hour", ["user_id"],
         [F.count(F.lit(1)).alias("pn"), dsum("value", "pv")],
     )
-    out = run_to_completion(
-        pairs, "stream_window_all_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    out, _ = run_stream(
+        pairs, "stream_window_all_sink", sf_dir, "events", output_mode="complete"
     )
     return (
         out.groupBy("window_start")
@@ -1973,10 +1867,7 @@ def cep_stream_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
         .within(14_400_000)
     )
     out = match_pattern_stream(ev, pat, key_col="user_id", watermark_delay="5 hours")
-    return run_to_completion(
-        out, "cep_stream_ooo_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "cep_stream_ooo_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -2023,10 +1914,7 @@ def cep_stream_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = match_pattern_stream(
         ev, pat, key_col="user_id", watermark_delay="10 minutes", output="timeouts"
     )
-    return run_to_completion(
-        out, "cep_stream_timeouts_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "cep_stream_timeouts_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -2085,10 +1973,7 @@ def stream_window_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = j.select(
         "user_id", F.col("w.start").alias("window_start"), "click_id", "purchase_id"
     )
-    return run_to_completion(
-        out, "stream_window_cogroup_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_window_cogroup_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -2123,14 +2008,11 @@ def stream_late_rows_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from proteus_engine_spark.streaming.sources import (
         dropped_late_rows,
         events_stream_late,
-        run_to_completion_observed,
     )
 
     ev = events_stream_late(spark, sf_dir)
     sorted_ev = event_time_sort(ev, "user_id", "ts")
-    sink, progress = run_to_completion_observed(
-        sorted_ev, "stream_late_obs_sink", "append"
-    )
+    sink, progress = run_stream(sorted_ev, "stream_late_obs_sink", sf_dir, "events")
     n_dropped = dropped_late_rows(progress)
     n_released = sink.count()
     return from_rows(
@@ -2181,10 +2063,7 @@ def stream_late_side_output(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
     )
-    return run_to_completion(
-        out, "stream_late_side_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_late_side_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -2237,10 +2116,7 @@ def stream_late_side_output_partitioned(spark: SparkSession, sf_dir: str) -> Dat
         "event_type",
         F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
     )
-    return run_to_completion(
-        out, "stream_late_side_part_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "stream_late_side_part_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -2684,10 +2560,7 @@ def cep_group_tail_optional_stream(spark: SparkSession, sf_dir: str) -> DataFram
     out = match_group_pattern_stream(
         ev, g, "user_id", watermark_delay="10 minutes"
     )
-    return run_to_completion(
-        out, "cep_group_tail_opt_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "cep_group_tail_opt_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -2928,10 +2801,7 @@ def cep_group_inner_quantifier_stream(spark: SparkSession, sf_dir: str) -> DataF
     out = match_group_pattern_stream(
         ev, g, "user_id", watermark_delay="10 minutes"
     )
-    return run_to_completion(
-        out, "cep_group_inner_quant_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "cep_group_inner_quant_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -2987,10 +2857,7 @@ def cep_group_stream_unbounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = match_group_pattern_stream(
         ev, g, "user_id", watermark_delay="10 minutes"
     )
-    return run_to_completion(
-        out, "cep_group_stream_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "cep_group_stream_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -3127,10 +2994,7 @@ def cep_group_stream_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = match_group_pattern_stream(
         ev, g, "user_id", watermark_delay="10 minutes", output="timeouts"
     )
-    return run_to_completion(
-        out, "cep_group_stream_timeouts_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(out, "cep_group_stream_timeouts_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -3209,10 +3073,7 @@ def stream_session_windows_chained(spark: SparkSession, sf_dir: str) -> DataFram
         "n_events",
         "n_buckets",
     )
-    return run_to_completion(
-        final, "stream_session_windows_chained_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    return run_stream(final, "stream_session_windows_chained_sink", sf_dir, "events")[0]
 
 
 @register(
@@ -3258,9 +3119,8 @@ def stream_window_quantile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("ap")[1].alias("est90"),
         )
     )
-    streamed = run_to_completion(
-        agg, "stream_wqb_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    streamed, _ = run_stream(
+        agg, "stream_wqb_sink", sf_dir, "events", output_mode="complete"
     )
     from proteus_engine_spark.sources import load_table
 
@@ -3334,20 +3194,9 @@ def stream_window_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_w div 32) present, est <= exact, undercount <= N_w div 32; the
     windows inside the 10-minute watermark tail never close and are cut
     on both sides ((w+1)*100 < max_minute - 10)."""
-    import os
-
-    from proteus_engine_spark.streaming.sources import probe_parquet_schema
     from proteus_engine_spark.streaming.stateful import windowed_heavy_hitters
 
-    schema = probe_parquet_schema(
-        spark, os.path.join(sf_dir, "documents.parquet")
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    stream = file_stream(spark, sf_dir, "documents.parquet")
     toks = (
         stream.withColumn(
             "ts", F.timestamp_micros((F.col("doc_id") + 1) * 60_000_000)
@@ -3361,10 +3210,9 @@ def stream_window_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = windowed_heavy_hitters(
         toks, "token", window_ms=100 * 60_000, k=32, shards=4
     )
-    streamed = run_to_completion(
-        sk, "stream_whh_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    # state sized on events like the events-stream gates (documents is
+    # ~4x smaller and would plan half the partitions at sf0.1)
+    streamed, _ = run_stream(sk, "stream_whh_sink", sf_dir, "events")
 
     docs = load_table(spark, sf_dir, "documents")
     btoks = docs.select(
@@ -3437,9 +3285,8 @@ def stream_window_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.approx_count_distinct("user_id", rsd=0.02).alias("approx"))
         .select(F.col("w.start").alias("window_start"), "approx")
     )
-    streamed = run_to_completion(
-        agg, "stream_wad_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
+    streamed, _ = run_stream(
+        agg, "stream_wad_sink", sf_dir, "events", output_mode="complete"
     )
     from proteus_engine_spark.sources import load_table
 

@@ -27,7 +27,7 @@ Scale: the feedback volume per trigger is the live frontier, not the
 corpus; each hop's files are pruned by normal file-source listing. For a
 long-running production loop, compact or TTL the feedback dir (it only
 ever needs the unprocessed tail); `run_iterative_to_completion` is the
-bounded test/oracle harness, like `sources.run_to_completion`.
+bounded test/oracle harness, like `sources.run_stream`.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Streaming sources.
+"""Streaming sources and the bounded-stream runner.
 
 Reference: StreamExecutionEnvironment sources (socketTextStream :1186,
 readFile PROCESS_CONTINUOUSLY :991, fromElements :696, addSource :1391,
@@ -6,19 +6,37 @@ Kafka connectors in /root/reference/flink-connectors/) — mapped to
 Structured Streaming's file/rate/kafka/socket sources.
 
 For tests and oracle checks, the events parquet is replayed through the
-file source: bounded input driven to completion with processAllAvailable(),
-which makes streaming results deterministic and comparable to batch SQL —
-the PySpark analogue of the reference's bounded ITCase streams
-(StreamITCase pattern in flink-table tests).
+file source (``file_stream``) and driven to completion by ``run_stream``:
+bounded input drained with processAllAvailable(), which makes streaming
+results deterministic and comparable to batch SQL — the PySpark analogue
+of the reference's bounded ITCase streams (StreamITCase pattern in
+flink-table tests).
+
+Staged replays (``events_stream_ooo``, ``events_stream_late``, the CSV
+gate's copy of events) are written once per scale factor by
+``stage_replay``. Their arrival order lives in file mtimes, which not
+every copy of a checkout keeps, so ``stage_replay`` re-applies it from
+the ``fNN`` file names on every call.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+_SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch",
+)
+_MTIME_BASE = 1_000_000_000  # fixed epoch: deterministic arrival order
+_PIECE = re.compile(r"f(\d+)\.parquet")
 
 
 def probe_parquet_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -33,24 +51,32 @@ def probe_parquet_schema(spark: SparkSession, path: str) -> T.StructType:
         return spark.read.parquet(path).schema
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as an unbounded stream (file source monitoring the
-    parquet path — the senv.readFile(PROCESS_CONTINUOUSLY) equivalent).
+def file_stream(
+    spark: SparkSession,
+    directory: str,
+    pattern: str,
+    probe: str | None = None,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The parquet files of ``directory`` matching ``pattern`` as an
+    unbounded stream (the senv.readFile(PROCESS_CONTINUOUSLY) equivalent).
 
-    The stream schema is PROBED from the batch footer, never assumed: the
-    driver-generated events.parquet stores ts as timestamp[us], which Spark
-    reads natively; only if a layout ships TIMESTAMP(NANOS)-as-long does the
-    nanos→micros division apply (mirroring sources/tables.py's batch path).
-    """
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = probe_parquet_schema(spark, path)
-    raw = (
+    The stream schema is PROBED from the footer of ``probe`` (default: the
+    one file ``pattern`` names), never assumed. A ``ts`` column, when the
+    schema has one, is normalised to TIMESTAMP: the generated
+    events.parquet stores ts as timestamp[us], which Spark reads natively;
+    only if a layout ships TIMESTAMP(NANOS)-as-long does the nanos→micros
+    division apply (mirroring sources/tables.py's batch path)."""
+    schema = probe_parquet_schema(spark, os.path.join(directory, probe or pattern))
+    reader = (
         spark.readStream.schema(schema)
         .format("parquet")
-        .option("pathGlobFilter", "events.parquet")  # file source needs a dir
-        .load(sf_dir)
+        .option("pathGlobFilter", pattern)  # the file source needs a dir
     )
-    ts_type = schema["ts"].dataType
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    raw = reader.load(directory)
+    ts_type = schema["ts"].dataType if "ts" in schema.fieldNames() else None
     if isinstance(ts_type, T.LongType):
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(ts_type, T.TimestampNTZType):
@@ -61,11 +87,31 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as an unbounded stream."""
+    return file_stream(spark, sf_dir, "events.parquet")
+
+
 def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
     """senv.generateSequence equivalent: the rate source (monotonic value +
     proc-time timestamp)."""
     return (
         spark.readStream.format("rate").option("rowsPerSecond", str(rows_per_second)).load()
+    )
+
+
+def _tree_bytes(path: str) -> int:
+    """Bytes of a parquet source: the file, or every data file under a
+    directory-layout source (Spark output: part files; ``_``/``.`` files
+    such as _SUCCESS and checksums are not data). Raises OSError when the
+    path does not exist."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
     )
 
 
@@ -77,8 +123,9 @@ def state_partitions_for(
     floor: int = 4,
 ) -> int | None:
     """Scale-adaptive state-store partition count for a streaming query
-    (r18, guide §2 — partitioning derived from input size, not a local
-    constant).
+    over ``<sf_dir>/<table>.parquet`` sources (default: events), each a
+    file or a directory (guide §2 — partitioning derived from input size,
+    not a local constant).
 
     Every stateful operator plans ``spark.sql.shuffle.partitions`` state
     store instances, and EVERY micro-batch pays a fixed per-instance cost
@@ -101,13 +148,13 @@ def state_partitions_for(
     parallelism (the A/B shows the delta-trigger walk degrading below 8).
     Returns None (= keep the session default) when a size cannot be
     determined."""
-    total = 0
-    for t in tables or ("events",):
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
+    try:
+        total = sum(
+            _tree_bytes(os.path.join(sf_dir, f"{t}.parquet"))
+            for t in tables or ("events",)
+        )
+    except OSError:
+        return None
     try:
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
@@ -116,29 +163,42 @@ def state_partitions_for(
     return int(max(min(cap, n), min(floor, cap)))
 
 
-def run_to_completion(
+def run_stream(
     df: DataFrame,
     query_name: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drive a (bounded) streaming DataFrame to completion into a memory
-    sink and return the final result table. Test/oracle harness only — a
-    production deployment writes to parquet/kafka with checkpointing.
+    sf_dir: str,
+    *tables: str,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> tuple[DataFrame, list]:
+    """Drive a bounded streaming DataFrame to completion into the memory
+    sink ``query_name``; return the sink table and the query's progress
+    events (for metric assertions: dropped-late-row counts, state
+    operators). Test/oracle harness only — a production deployment writes
+    to parquet/kafka with its own checkpointing.
 
-    ``state_partitions`` (r18): number of shuffle/state-store partitions
-    the streaming query plans with (see ``state_partitions_for``). The
-    conf is set only for the ``start()`` call — Structured Streaming
-    clones the session configuration into the query at start, so the
-    running stream keeps the value while the session is restored
-    immediately; keyed-state results are partition-count-independent."""
+    State is sized from the source tables ``<sf_dir>/<table>.parquet``
+    (``state_partitions_for``). The count reaches the query through
+    ``spark.sql.shuffle.partitions``, set on the shared session only
+    around ``start()``: Structured Streaming clones the session
+    configuration into the query at start, so the running stream keeps
+    the value while the session is restored immediately; keyed-state
+    results are partition-count-independent. The swap assumes a single
+    thread plans and starts queries on the session, as every gate, test
+    and benchmark does; a concurrent caller would plan with the swapped
+    value. ``checkpoint`` keeps the query's checkpoint at that path (the
+    queryable-state gate reads its state back); by default Spark uses a
+    temporary one."""
     spark = df.sparkSession
     writer = (
         df.writeStream.outputMode(output_mode).format("memory").queryName(query_name)
     )
-    if state_partitions:
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    parts = state_partitions_for(spark, sf_dir, *tables)
+    if parts:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         try:
             q = writer.start()
         finally:
@@ -147,10 +207,58 @@ def run_to_completion(
         q = writer.start()
     try:
         q.processAllAvailable()
+        progress = list(q.recentProgress)
     finally:
         q.stop()
         q.awaitTermination()
-    return spark.table(query_name)
+    return spark.table(query_name), progress
+
+
+def stage_replay(
+    kind: str, sf_dir: str, write: Callable[[str], None], *params: object
+) -> str:
+    """Stage a replay directory once per scale factor, as
+    ``<repo>/.scratch/<kind>_<sf tag>[_<param>...]``, and return its path.
+
+    ``write(tmp)`` fills a fresh sibling directory, which a ``_SUCCESS``
+    marker closes and an atomic rename (same filesystem) moves into
+    place. Concurrent runs are safe: the content is deterministic, so
+    the run that loses the rename discards its copy. A stage that crashed
+    before its rename (target without ``_SUCCESS``) is cleared and redone.
+
+    Arrival order: the file source replays pieces named ``fNN.parquet``
+    in mtime order, and a copy of the checkout (``cp -r``, tar or rsync
+    without ``-t``, CI caches) may flatten mtimes. So on EVERY call, not
+    only on first staging, each piece's mtime is re-stamped from its
+    index ``NN`` (``_MTIME_BASE + 60 * NN``); a stage already in order is
+    left untouched."""
+    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    target = os.path.join(_SCRATCH, "_".join(map(str, (kind, sf_tag, *params))))
+    done = os.path.join(target, "_SUCCESS")
+    if not os.path.exists(done):
+        os.makedirs(_SCRATCH, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f"{kind}_stage_", dir=_SCRATCH)
+        write(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+        if os.path.isdir(target) and not os.path.exists(done):
+            # A crashed stage left target without _SUCCESS: os.replace onto
+            # a non-empty dir fails ENOTEMPTY forever, and reading it as
+            # "concurrent run won" would stream from an incomplete dir.
+            shutil.rmtree(target, ignore_errors=True)
+        try:
+            os.replace(tmp, target)
+        except OSError:
+            if not os.path.exists(done):
+                raise  # neither ours nor a completed concurrent stage
+            shutil.rmtree(tmp, ignore_errors=True)  # concurrent run won
+    for name in os.listdir(target):
+        m = _PIECE.fullmatch(name)
+        if m:
+            path = os.path.join(target, name)
+            mtime = _MTIME_BASE + 60 * int(m.group(1))
+            if os.stat(path).st_mtime != mtime:
+                os.utime(path, (mtime, mtime))
+    return target
 
 
 def events_stream_ooo(
@@ -164,83 +272,42 @@ def events_stream_ooo(
     operators (the reference's RowTime*Over / WindowOperator ITCases feed
     late elements the same way).
 
-    Staging (once per sf, atomic rename — concurrent runs safe): rows are
-    split into files [head] [b1 b0 b3 b2 b5 b4] [tail], where b0..b5
-    are consecutive `block_ms` event-time blocks starting at 45% of the
-    span and the pair-swap makes every other file arrive BEFORE an
-    earlier-in-event-time file. File mtimes force that arrival order, and
-    maxFilesPerTrigger=1 makes each file its own micro-batch, so a
-    downstream operator sees genuinely late (but within-watermark-delay)
-    data. With 2h blocks the worst lateness is < 4h, so any watermark
-    delay >= 4h (callers use 5h) loses no rows.
+    Staged once per sf (``stage_replay``): rows are split into files
+    [head] [b1 b0 b3 b2 b5 b4] [tail], where b0..b5 are consecutive
+    `block_ms` event-time blocks starting at 45% of the span and the
+    pair-swap makes every other file arrive BEFORE an earlier-in-event-time
+    file. File mtimes, re-applied from the file names on every call, force
+    that arrival order, and maxFilesPerTrigger=1 makes each file its own
+    micro-batch, so a downstream operator sees genuinely late (but
+    within-watermark-delay) data. With 2h blocks the worst lateness is
+    < 4h, so any watermark delay >= 4h (callers use 5h) loses no rows.
     """
-    import shutil
-    import tempfile
 
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def write(tmp: str) -> None:
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-    parent = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(parent, exist_ok=True)
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    target = os.path.join(parent, f"ooo_events_{sf_tag}_{block_ms}_{n_blocks}")
-    if not os.path.exists(os.path.join(target, "_SUCCESS")):
-        tmp = tempfile.mkdtemp(prefix="ooo_stage_", dir=parent)
         tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
         ts_us = tbl.column("ts").to_numpy().astype("datetime64[us]").astype("int64")
         lo, hi = int(ts_us.min()), int(ts_us.max())
         swap_start = lo + (hi - lo) * 45 // 100
-        block_us = block_ms * 1000
         # piece index per row: 0 = head, 1..n_blocks = swapped blocks
         # (block i -> piece 1 + (i XOR 1)), n_blocks+1 = tail
-        blk = (ts_us - swap_start) // block_us
+        blk = (ts_us - swap_start) // (block_ms * 1000)
         piece = np.where(
             ts_us < swap_start,
             0,
             np.where(blk >= n_blocks, n_blocks + 1, 1 + (blk ^ 1)),
         ).astype("int64")
-        mtime_base = 1_000_000_000  # fixed epoch: deterministic ordering
         for p in range(n_blocks + 2):
             sub = tbl.filter(pa.array(piece == p))
-            path = os.path.join(tmp, f"f{p:02d}.parquet")
-            pq.write_table(sub, path)
-            os.utime(path, (mtime_base + 60 * p, mtime_base + 60 * p))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        os.utime(os.path.join(tmp, "_SUCCESS"), (mtime_base, mtime_base))
-        if os.path.isdir(target) and not os.path.exists(
-            os.path.join(target, "_SUCCESS")
-        ):
-            # A previous staging run crashed after creating target but
-            # before its rename completed: os.replace onto a non-empty
-            # dir fails ENOTEMPTY forever, and treating that as
-            # "concurrent run won" would stream from the permanently
-            # incomplete dir. Clear the stale target first.
-            shutil.rmtree(target, ignore_errors=True)
-        try:
-            os.replace(tmp, target)  # atomic: same filesystem (sibling dirs)
-        except OSError:
-            if os.path.exists(os.path.join(target, "_SUCCESS")):
-                shutil.rmtree(tmp, ignore_errors=True)  # concurrent run won
-            else:
-                raise  # neither ours nor a completed concurrent stage
-    schema = probe_parquet_schema(spark, os.path.join(target, "f00.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(target)
+            pq.write_table(sub, os.path.join(tmp, f"f{p:02d}.parquet"))
+
+    target = stage_replay("ooo_events", sf_dir, write, block_ms, n_blocks)
+    return file_stream(
+        spark, target, "*.parquet", probe="f00.parquet", max_files_per_trigger=1
     )
-    ts_type = schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ts_type, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return raw
 
 
 # THE single source for the late-replay split point. The staging below,
@@ -282,7 +349,7 @@ def events_stream_late(
     late elements as a side output, Spark as the
     numRowsDroppedByWatermark state-operator metric).
 
-    Staging (same atomic-rename discipline as events_stream_ooo): rows
+    Staged once per sf (``stage_replay``, as events_stream_ooo): rows
     split at cut = lo + (hi - lo) * cut_pct // 100 on epoch-ms —
       f00: on-time rows (ts_ms >= cut) EXCEPT the earliest one; contains
            the global max ts, so the watermark jumps to hi - delay.
@@ -293,25 +360,16 @@ def events_stream_late(
       f02: every row with ts_ms < cut — all far below the filter
            watermark by construction, so ALL of them are dropped and
            counted: drop count == COUNT(ts_ms < cut), SQL-expressible.
-    File mtimes force arrival order; maxFilesPerTrigger=1 makes each file
-    its own micro-batch.
+    File mtimes, re-applied from the file names on every call, force
+    arrival order; maxFilesPerTrigger=1 makes each file its own
+    micro-batch.
     """
-    import shutil
-    import tempfile
 
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def write(tmp: str) -> None:
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-    parent = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(parent, exist_ok=True)
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    target = os.path.join(parent, f"late_events_{sf_tag}_{cut_pct}")
-    if not os.path.exists(os.path.join(target, "_SUCCESS")):
-        tmp = tempfile.mkdtemp(prefix="late_stage_", dir=parent)
         tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
         ts_ms = (
             tbl.column("ts").to_numpy().astype("datetime64[us]").astype("int64")
@@ -327,69 +385,14 @@ def events_stream_late(
         spacer = ot_idx[np.lexsort((ids[ot_idx], ts_ms[ot_idx]))[0]]
         piece = np.where(on_time, 0, 2)
         piece[spacer] = 1
-        mtime_base = 1_000_000_000
         for p in range(3):
-            path = os.path.join(tmp, f"f{p:02d}.parquet")
-            pq.write_table(tbl.filter(pa.array(piece == p)), path)
-            os.utime(path, (mtime_base + 60 * p, mtime_base + 60 * p))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        os.utime(os.path.join(tmp, "_SUCCESS"), (mtime_base, mtime_base))
-        if os.path.isdir(target) and not os.path.exists(
-            os.path.join(target, "_SUCCESS")
-        ):
-            shutil.rmtree(target, ignore_errors=True)  # stale crashed stage
-        try:
-            os.replace(tmp, target)
-        except OSError:
-            if os.path.exists(os.path.join(target, "_SUCCESS")):
-                shutil.rmtree(tmp, ignore_errors=True)  # concurrent run won
-            else:
-                raise
-    schema = probe_parquet_schema(spark, os.path.join(target, "f00.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(target)
-    )
-    ts_type = schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ts_type, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return raw
+            sub = tbl.filter(pa.array(piece == p))
+            pq.write_table(sub, os.path.join(tmp, f"f{p:02d}.parquet"))
 
-
-def run_to_completion_observed(
-    df: DataFrame,
-    query_name: str,
-    output_mode: str = "append",
-    state_partitions: int | None = None,
-) -> tuple[DataFrame, list]:
-    """run_to_completion variant that also returns the query's progress
-    events, for metric assertions (dropped-late-row counts etc.).
-    ``state_partitions`` as in ``run_to_completion``."""
-    spark = df.sparkSession
-    writer = (
-        df.writeStream.outputMode(output_mode).format("memory").queryName(query_name)
+    target = stage_replay("late_events", sf_dir, write, cut_pct)
+    return file_stream(
+        spark, target, "*.parquet", probe="f00.parquet", max_files_per_trigger=1
     )
-    if state_partitions:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
-            q = writer.start()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    else:
-        q = writer.start()
-    try:
-        q.processAllAvailable()
-        progress = list(q.recentProgress)
-    finally:
-        q.stop()
-        q.awaitTermination()
-    return spark.table(query_name), progress
 
 
 def dropped_late_rows(progress: list) -> int:

@@ -63,6 +63,9 @@ def main() -> None:
         ref = ref_rs.get(name)
         if ref is None:
             continue
+        if "error" in entry and "error" not in ref:
+            regressions.append(f"{name}: ReadSchema audit now errors: {entry['error']}")
+            continue
         nf, rf = entry.get("wide_flags", 0), ref.get("wide_flags", 0)
         if nf > rf:
             regressions.append(f"{name}: wide-column flags {rf} -> {nf}")

@@ -4,7 +4,7 @@
 Usage: python scripts/capture_plans.py <suffix> [name1,name2,...]
 
 Writes plans/r17/<query>_<suffix>.txt for each query. Queries that drive
-a streaming job to completion inside fn() (run_to_completion → memory
+a streaming job to completion inside fn() (run_stream → memory
 sink) still execute; their captured plan is the final table scan plus
 whatever batch post-processing follows, so the interesting streaming
 plan is the one Structured Streaming ran internally — for those the

@@ -125,6 +125,17 @@ def main() -> None:
                 scans.append({"table": table, "cols": cols, "wide": wide})
         flagged = [s for s in scans if s["wide"]]
         report[name] = {"scans": scans, "wide_flags": len(flagged)}
+        # a ReadSchema line the anchored regex cannot parse (truncated, or
+        # a format change) is an audit error, never a silently skipped scan
+        unparsed = [
+            line.strip()
+            for line in plan.splitlines()
+            if "ReadSchema:" in line and not _RS_RE.search(line)
+        ]
+        if unparsed:
+            report[name]["error"] = f"{len(unparsed)} unparsed ReadSchema line(s)"
+            report[name]["unparsed"] = unparsed
+            print(f"ERROR {name}: {report[name]['error']}", file=sys.stderr)
         if flagged:
             tags = ", ".join(f"{s['table']}[{'+'.join(s['wide'])}]" for s in flagged)
             print(f"{name}: WIDE {tags}")
@@ -132,7 +143,11 @@ def main() -> None:
 
     out_path.write_text(json.dumps(report, indent=1, sort_keys=True))
     n_flagged = sum(1 for e in report.values() if e.get("wide_flags"))
-    print(f"\n{len(report)} gates audited, {n_flagged} with wide-column scans")
+    n_errors = sum(1 for e in report.values() if "error" in e)
+    print(
+        f"\n{len(report)} gates audited, {n_flagged} with wide-column scans, "
+        f"{n_errors} with audit errors"
+    )
 
 
 if __name__ == "__main__":

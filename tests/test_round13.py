@@ -1600,3 +1600,25 @@ def test_sq8_encode_and_bpe_counts_are_scan_fused(spark):
     bpe = REGISTRY["corpus_bpe_token_counts"].fn(spark, SF)
     bpe.collect()
     assert "Exchange" not in bpe._jdf.queryExecution().executedPlan().toString()
+
+
+def test_sampling_guards_name_null_group_keys(spark):
+    """A NULL group value has no weight or budget: both in-plan coverage
+    guards must fail naming it, not drop its rows or raise a NULL
+    message."""
+    from pyspark.sql import functions as F
+
+    from proteus_engine_spark.datapipe.sampling import (
+        interleave_by_weight,
+        sample_to_token_budget,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a", "x y"), (2, None, "x y z"), (3, "a", "z")],
+        "doc_id long, g string, text string",
+    )
+    with pytest.raises(Exception, match=r"groups without a weight: \['NULL'\]"):
+        interleave_by_weight(df, "g", {"a": 1.0}).collect()
+    sz = F.size(F.split("text", r"\s+"))
+    with pytest.raises(Exception, match=r"groups without a budget: \['NULL'\]"):
+        sample_to_token_budget(df, "g", {"a": 5}, size_col=sz).collect()

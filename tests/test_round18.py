@@ -33,26 +33,55 @@ class TestStatePartitionsFor:
 
         assert state_partitions_for(spark, "/nonexistent/dir") is None
 
+    def test_directory_layout_source_is_sized_by_its_files(self, spark, tmp_path):
+        """A Spark-written (directory-layout) table is sized by the bytes of
+        its part files, not by the directory entry's own few KB, which
+        would clamp every real dataset to the floor."""
+        from proteus_engine_spark.sources import load_table
+        from proteus_engine_spark.streaming.sources import state_partitions_for
+
+        table = tmp_path / "events.parquet"
+        load_table(spark, SF_DIR, "events").repartition(3).write.parquet(str(table))
+        data = sum(
+            f.stat().st_size for f in table.iterdir() if f.name.startswith("part-")
+        )
+        bpp = 4096
+        assert data > 4 * bpp  # enough bytes to size above the floor of 4
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n = state_partitions_for(spark, str(tmp_path), "events", bytes_per_partition=bpp)
+        assert n == min(cap, -(-data // bpp))
+        assert n > 4
+
     def test_stream_plans_with_requested_partitions(self, spark):
-        """The scoped conf really reaches the stateful operator: the
-        memory-sink aggregate runs with N state-store instances and the
-        session conf is restored afterwards."""
+        """run_stream sizes state itself and the scoped conf really reaches
+        the stateful operator: under a session value that differs from the
+        sized count, every state operator reports the sized count as its
+        numShufflePartitions, and the session conf is restored afterwards."""
         from proteus_engine_spark.streaming.sources import (
             events_stream,
-            run_to_completion,
+            run_stream,
+            state_partitions_for,
         )
 
         before = spark.conf.get("spark.sql.shuffle.partitions")
-        ev = events_stream(spark, SF_DIR)
-        agg = (
-            ev.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour"))
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        out = run_to_completion(agg, "r18_sp_probe", "append", state_partitions=3)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-        # state dir of the last query: one directory per partition id
-        assert out.count() >= 0
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        try:
+            sized = state_partitions_for(spark, SF_DIR, "events")
+            assert sized is not None and sized != 7
+            ev = events_stream(spark, SF_DIR)
+            agg = (
+                ev.withWatermark("ts", "10 minutes")
+                .groupBy(F.window("ts", "1 hour"))
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            out, progress = run_stream(agg, "r18_sp_probe", SF_DIR, "events")
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", before)
+        ops = [so for p in progress for so in p["stateOperators"]]
+        assert ops, "the aggregate reported no state operator"
+        assert {so["numShufflePartitions"] for so in ops} == {sized}
+        assert out.count() > 0
 
 
 class TestPagerankRestructure:

@@ -96,7 +96,7 @@ def test_dropped_late_rows_metric(spark, tmp_path):
 
     from proteus_engine_spark.streaming.sources import (
         dropped_late_rows,
-        run_to_completion_observed,
+        run_stream,
     )
     from proteus_engine_spark.streaming.stateful import event_time_sort
 
@@ -121,7 +121,9 @@ def test_dropped_late_rows_metric(spark, tmp_path):
         .format("parquet").option("maxFilesPerTrigger", "1").load(str(tmp_path))
     )
     out = event_time_sort(raw, "user_id", "ts", watermark_delay="10 minutes")
-    sink, progress = run_to_completion_observed(out, "late_metric_test", "append")
+    sink, progress = run_stream(
+        out, "late_metric_test", str(tmp_path), "f0", "f1", "f2"
+    )
     assert dropped_late_rows(progress) == 3  # the whole third file
     assert sorted(r["event_id"] for r in sink.collect()) == [1, 3]  # ts < wm_f
 

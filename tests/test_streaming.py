@@ -375,3 +375,28 @@ def test_savepoint_fork_and_immutability(spark):
 
     with _pytest.raises(ValueError, match="immutable"):
         trigger_savepoint(f"{d}/ckpt_a", sp)
+
+
+def test_ooo_replay_order_survives_flattened_mtimes(spark, duck):
+    """The out-of-order replay's arrival order lives in the staged files'
+    mtimes, which a copy of the checkout (cp -r, tar, CI caches) may
+    flatten. Staging re-applies the order from the file names on every
+    call, so the replay still equals its oracle after the staged
+    directory's mtimes are set to one value."""
+    from proteus_engine_spark.queries import REGISTRY
+    from proteus_engine_spark.streaming.sources import events_stream_ooo
+    from tests.conftest import REPO, assert_matches_oracle
+
+    events_stream_ooo(spark, SF_DIR)  # stage the replay, or reuse the stage
+    sf_tag = os.path.basename(SF_DIR.rstrip("/")).replace(".", "_")
+    staged = REPO / ".scratch" / f"ooo_events_{sf_tag}_7200000_6"
+    saved = {p: p.stat().st_mtime for p in staged.iterdir()}
+    try:
+        for p in saved:
+            os.utime(p, (1_500_000_000, 1_500_000_000))
+        q = REGISTRY["stream_over_running_ooo"]
+        assert_matches_oracle(q.fn(spark, SF_DIR), duck, q.oracle)
+    finally:
+        # leave a correctly ordered cache for later tests even on failure
+        for p, t in saved.items():
+            os.utime(p, (t, t))

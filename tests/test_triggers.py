@@ -181,7 +181,7 @@ def test_event_time_trigger_matches_native_window_path(spark):
     from pyspark.sql import functions as F
 
     from proteus_engine_spark.queries.exact import dsum
-    from proteus_engine_spark.streaming.sources import events_stream, run_to_completion
+    from proteus_engine_spark.streaming.sources import events_stream, run_stream
     from proteus_engine_spark.streaming.windows import windowed_agg
 
     sf_dir = os.environ.get("PROTEUS_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -200,6 +200,6 @@ def test_event_time_trigger_matches_native_window_path(spark):
     )
     ref = sorted(
         (r["user_id"], pd.Timestamp(r["window_start"]), r["n"], round(r["total_value"], 6))
-        for r in run_to_completion(native, "native_diff_sink", "append").collect()
+        for r in run_stream(native, "native_diff_sink", sf_dir, "events")[0].collect()
     )
     assert got == ref and len(got) > 0
